@@ -53,6 +53,7 @@ METRICS: dict[str, str] = {
     "aria.attempts_per_txn": "count",
     "aria.abort_frac": "frac",
     "failed_frac": "frac",
+    "mem.peak_rss_mb": "MB",
     "host.calibration_s": "s",
     "trace.overhead_frac": "frac",
 }

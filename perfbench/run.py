@@ -7,7 +7,7 @@ One run is one fresh process: it generates its inputs from ``--seed``,
 sets up a warmed session (launching the JVM), then runs passes over
 the workload's items, one item at a time: a first pass, then warm
 passes while the next one fits in ``--seconds`` (at least one, at most
-two; a traced run makes four). The first pass is reported on its own;
+two, one for ``aria_epoch_loop``; a traced run makes four). The first pass is reported on its own;
 the warm passes give the steady-state figures. Results are checked
 outside the timed region; a raise, a watchdog cancel or a wrong result
 is a failure and enters the pass time at the watchdog cap.
@@ -27,6 +27,7 @@ import time
 T_PROCESS = time.perf_counter()
 
 import argparse  # noqa: E402
+import gc  # noqa: E402
 import hashlib  # noqa: E402
 import json  # noqa: E402
 import math  # noqa: E402
@@ -49,15 +50,18 @@ END_TO_END: dict[str, str] = {
     "query_p50_s": "s",
     "query_p90_s": "s",
     "txn_per_s": "1/s",
-    "peak_rss_mb": "MB",
+    "rss_after_gc_mb": "MB",
 }
 
 ITEM_CAP_S = 45.0  # watchdog: an item's jobs are cancelled after this
 # A run does a bounded amount of work: warm passes keep getting faster
 # (JIT), so a run that fitted more of them would report a lower pass_s,
 # lower latencies and a higher RSS only because the host was quick.
-MAX_WARM_PASSES = 2
+MAX_WARM_PASSES = 2  # unless the workload sets "max_warm"
 TRACED_WARM_PASSES = 4  # untraced, traced, traced, untraced
+# full GCs before rss_after_gc_mb is read: objects the Python driver released
+# free the heap in two or three rounds (see RssSampler.settled_mb)
+SETTLE_ROUNDS = (5, 8)  # (at least, at most)
 
 LLM_ITEMS = ["semdedup_pipeline", "sim_ann_ivf", "mm_extract_features"]
 
@@ -75,6 +79,8 @@ WORKLOADS: dict[str, dict] = {
         "kind": "aria", "rows": 50_000, "txns": 2000, "keys": 40_000,
         "local_threshold": 10_000, "max_epochs": 3, "batches": 1,
         "path": "distributed",
+        # a second warm batch fits in a 40 s run only on a quick host
+        "max_warm": 1,
     },
     # the reference configuration (200k preload, 150 txns, keys
     # U(1,20000)): under the default local-path threshold.
@@ -131,15 +137,18 @@ def prepare_env(run_dir: str) -> None:
 
 class RssSampler(threading.Thread):
     """Peak summed RSS of this process and all its descendants (the
-    JVM and its Python workers), sampled every 0.2 s."""
+    JVM and its Python workers), sampled every 0.2 s; and the same sum
+    once the JVM has dropped its garbage (``settled_mb``)."""
 
     def __init__(self):
         super().__init__(daemon=True)
         self.peak_kb = 0
+        self.pool_peak_kb = 0  # Spark's Python worker pool (pyspark.daemon)
         self.stop_event = threading.Event()
 
     @staticmethod
-    def _tree_rss_kb() -> int:
+    def _tree_rss_kb() -> tuple[int, int]:
+        """(summed RSS of the tree, the part of it in the worker pool)"""
         parent: dict[int, int] = {}
         for d in os.listdir("/proc"):
             if d.isdigit():
@@ -152,24 +161,59 @@ class RssSampler(threading.Thread):
         while frontier:
             tree |= frontier
             frontier = {p for p, pp in parent.items() if pp in frontier} - tree
-        total = 0
+        total = pool = 0
         for pid in tree:
             try:
+                with open(f"/proc/{pid}/cmdline", "rb") as f:
+                    in_pool = b"pyspark.daemon" in f.read()
                 with open(f"/proc/{pid}/status") as f:
                     for line in f:
                         if line.startswith("VmRSS:"):
-                            total += int(line.split()[1])
+                            kb = int(line.split()[1])
+                            total += kb
+                            pool += kb if in_pool else 0
                             break
             except OSError:
                 pass
-        return total
+        return total, pool
+
+    def _sample(self) -> tuple[int, int]:
+        total, pool = self._tree_rss_kb()
+        self.peak_kb = max(self.peak_kb, total)
+        self.pool_peak_kb = max(self.pool_peak_kb, pool)
+        return total, pool
 
     def run(self) -> None:
         while not self.stop_event.wait(0.2):
-            self.peak_kb = max(self.peak_kb, self._tree_rss_kb())
+            self._sample()
+
+    def settled_mb(self, spark) -> float:
+        """Summed RSS of the tree once the garbage is dropped. A round
+        collects Python's garbage (releasing the JVM objects the Python
+        driver still pointed at), runs a full GC of the JVM and waits 0.4 s.
+        Freed memory comes back in steps: Spark's cleaner removes the
+        blocks and broadcasts of objects a GC found unreachable, which
+        frees others it tracks a round later, and G1 returns the heap
+        it shrank to the OS in the background. Rounds repeat, at least
+        ``SETTLE_ROUNDS[0]``, until one moves the reading by less than
+        3 MB. Spark stops idle Python workers on a timer, so the worker
+        pool counts at its peak: whether a worker outlived the last
+        pass is chance."""
+        least, most = SETTLE_ROUNDS
+        prev = None
+        for i in range(most):
+            gc.collect()
+            spark._jvm.java.lang.System.gc()
+            time.sleep(0.4)
+            total, pool = self._sample()
+            now = (total - pool + self.pool_peak_kb) / 1024
+            if i + 1 >= least and abs(prev - now) < 3:
+                break
+            prev = now
+        return now
 
     def stop(self) -> float:
-        self.peak_kb = max(self.peak_kb, self._tree_rss_kb())
+        self._sample()
         self.stop_event.set()
         self.join()
         return self.peak_kb / 1024
@@ -600,19 +644,21 @@ def measure(args, cfg: dict, run_dir: str, rss: RssSampler, import_s: float) -> 
         if probe is not None:
             if n_warm >= TRACED_WARM_PASSES:
                 break
-        elif n_warm >= MAX_WARM_PASSES or (
+        elif n_warm >= cfg.get("max_warm", MAX_WARM_PASSES) or (
             n_warm >= 1 and elapsed + passes[-1]["wall"] > args.seconds
         ):
             break
     spans.spans[root]["end"] = round(time.perf_counter() - T_PROCESS, 6)
 
+    # after the timed passes, so the GCs change none of the timings
+    after_gc_mb = rss.settled_mb(spark)
     stop_spark(spark)
     peak_mb = rss.stop()
 
     warm = passes[1:]
     if args.trace:
         metrics = layer_metrics(passes, start_s, warm_s, calibration, failed,
-                                attempted)
+                                attempted, peak_mb)
     else:
         # a query's latency is its median over the warm passes, so the
         # percentiles mean the same whether a run made one warm pass or
@@ -630,7 +676,7 @@ def measure(args, cfg: dict, run_dir: str, rss: RssSampler, import_s: float) -> 
             "query_p50_s": percentile(warm_items, 0.5),
             "query_p90_s": percentile(warm_items, 0.9),
             "txn_per_s": sum(p["done"] for p in warm) / warm_wall,
-            "peak_rss_mb": peak_mb,
+            "rss_after_gc_mb": after_gc_mb,
         }
     units = END_TO_END
     if args.trace:
@@ -639,6 +685,7 @@ def measure(args, cfg: dict, run_dir: str, rss: RssSampler, import_s: float) -> 
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "scale": scale, "gen_s": gen_s, "setup_s": setup_s,
+        "peak_rss_mb": peak_mb, "rss_after_gc_mb": after_gc_mb,
         "passes": [{k: v for k, v in p.items() if k != "layers"} for p in passes],
         "host": host, "items": rows_log, "spans": spans.spans,
     }
@@ -676,7 +723,8 @@ def aria_layer(result: dict, row: dict) -> dict:
     }
 
 
-def layer_metrics(passes, start_s, warm_s, calibration, failed, attempted) -> dict:
+def layer_metrics(passes, start_s, warm_s, calibration, failed, attempted,
+                  peak_mb) -> dict:
     """Per-layer values: the median over traced warm passes of each
     per-pass sum; codegen counts come from the first pass, where the
     compiles happen."""
@@ -709,6 +757,7 @@ def layer_metrics(passes, start_s, warm_s, calibration, failed, attempted) -> di
     m["session.warmup_s"] = warm_s
     m["failed_frac"] = failed / attempted
     m["host.calibration_s"] = calibration
+    m["mem.peak_rss_mb"] = peak_mb
     if untraced_warm and traced_warm:
         m["trace.overhead_frac"] = wall / statistics.median(
             p["wall"] for p in untraced_warm) - 1
